@@ -73,7 +73,6 @@ class CrawlConfig:
     # max URLs fetched per host per wave; None = unlimited (politeness
     # token budget; the deterministic analogue of a per-host delay)
     host_budget: int | None = None
-    shuffle_partitions: int = 32
     # seen-membership prefilter tier
     bloom_shards: int = 32
     bloom_capacity_per_shard: int = 1 << 17
@@ -95,25 +94,21 @@ class CrawlConfig:
     # persist narrow (meta, spans) projections of the corpus for the
     # per-wave joins; disable when the corpus doesn't fit executor storage
     cache_corpus: bool = True
-    # precompute the whole corpus' link extraction ONCE (one mapInPandas
-    # pass) and expand waves by joining the narrow cached edge table,
+    # precompute the whole corpus' link extraction and classification ONCE
+    # (one mapInPandas pass) into a dictionary edge table — per-wave
+    # (src_key, dst_key, position) longs plus a per-distinct-link
+    # (dst_key → link, host) dictionary — and expand waves by joining it,
     # instead of re-joining + re-extracting span arrays per wave. The
     # right trade when the crawl covers a large fraction of the corpus
     # (nested-array scans per wave dominate otherwise); leave False when
-    # crawling a small slice of a huge corpus.
+    # crawling a small slice of a huge corpus. The layout carries neither
+    # raw link strings nor a per-wave classifier, so the crawl falls back
+    # to per-wave span extraction when store_inbound_links or
+    # crawl_linked_external is set, or when first_page_redirect_internal
+    # may widen the classifier (follow_redirects on a corpus with 3xx
+    # rows).
     precompute_edges: bool = False
-    # slim expand path: key intra-wave dedup and seen-rejection on
-    # xxhash64(link) and store the seen-part LSM as 8-byte key frames —
-    # the dedup exchange key, the whole anti-join chain and the per-wave
-    # part build/checkpoint/scan all move fixed-width longs instead of
-    # URL strings. Key-based rejection is exact up to xxhash64
-    # collisions: E[colliding URL pairs] ≈ n²/2^65 ≈ 2.7 at n = 10^10
-    # (each collision suppresses at most one URL), zero in practice at
-    # sandbox scale — the same keying the north rule specifies for the
-    # bloom/cuckoo membership tier. Set False for string-exact mode.
-    slim_expand: bool = True
     # snapshot/resume
-    state_dir: str | None = None
     checkpoint_every: int = 1  # waves between snapshot commits
     # pipeline snapshot commits on a background thread: wave N+1's compute
     # overlaps wave N's durable write (every commit input is an immutable

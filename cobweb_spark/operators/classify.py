@@ -182,8 +182,7 @@ def first_discovery_wins(
     position) is unique.
 
     ``key_col``: group on an 8-byte ``link_key`` (xxhash64) instead of
-    the URL string when the caller runs the slim expand path — the
-    exchange key shrinks ~6x and the downstream anti-join chain reuses
+    the URL string, as the crawler does — the exchange key shrinks ~6x and the downstream anti-join chain reuses
     the same hash partitioning with no new exchange.
     """
     cols = [c for c in candidates.columns if c != key_col]

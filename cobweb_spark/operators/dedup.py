@@ -29,10 +29,14 @@ def reject_seen(
     miss_backstop: list[DataFrame] | None = None,
     key_col: str = "link",
 ) -> DataFrame:
-    """candidates minus seen (on the queued-form URL string, or — slim
-    expand path — on its 8-byte xxhash64 ``link_key``, with seen parts
-    stored as key frames; see ``CrawlConfig.slim_expand`` for the
-    collision bound that keying trades for a ~6x smaller join payload).
+    """candidates minus seen (on the queued-form URL string, or — as the
+    crawler does — on its 8-byte ``link_key = xxhash64(url)``, with seen
+    parts stored as key frames; a ~6x smaller join payload).
+
+    Key-based rejection is exact up to xxhash64 collisions: for n distinct
+    URLs, E[colliding pairs] ≈ n²/2^65 ≈ 2.7 at n = 10^10 (each collision
+    suppresses at most one URL), zero in practice at test scale — the same
+    keying the north rule specifies for the bloom/cuckoo membership tier.
 
     ``prefilter`` is an optional SeenFilterBank (bloom+cuckoo tier): when
     given, candidates are split into definite-misses (pass through —

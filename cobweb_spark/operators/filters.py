@@ -127,8 +127,8 @@ class SeenFilterBank:
     def _keyed(
         self, df: DataFrame, key_col: str, key_is_hash: bool = False
     ) -> DataFrame:
-        # key_is_hash: the column already IS the xxhash64 key (slim
-        # expand path) — don't hash the hash
+        # key_is_hash: the column already IS the xxhash64 key (the
+        # crawler's link_key) — don't hash the hash
         key = F.col(key_col) if key_is_hash else F.xxhash64(F.col(key_col))
         return df.withColumn("__key", key).withColumn(
             "__shard",

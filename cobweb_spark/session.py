@@ -2,8 +2,10 @@
 
 Everything here is plain upstream Spark configuration: AQE on (runtime
 re-planning, skew-join splitting), Arrow on (all our Python touchpoints are
-pandas UDFs / mapInPandas), shuffle partitions sized for the sandbox
-(local[32]); on a real cluster these come from spark-submit conf.
+pandas UDFs / mapInPandas). Master and heap sizes default from the host
+(cores usable by this process, physical RAM); every ``SPARK_GRAFT_*``
+variable overrides its default. On a real cluster these come from
+spark-submit conf.
 """
 
 from __future__ import annotations
@@ -11,6 +13,25 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+# JVM heap (driver and, under local-cluster, each executor) as a share of
+# physical RAM: the Python workers, the Arrow buffers and the OS page cache
+# of the parquet inputs live outside the heap
+HEAP_RAM_FRACTION = 0.25
+
+
+def host_cores() -> int:
+    """Cores this process may run on (what ``nproc`` reports)."""
+    try:
+        return len(os.sched_getaffinity(0))
+    except AttributeError:
+        return os.cpu_count() or 1
+
+
+def host_heap_mb() -> int:
+    """Default JVM heap: ``HEAP_RAM_FRACTION`` of physical RAM, >= 1 GiB."""
+    ram = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return max(1024, int(ram * HEAP_RAM_FRACTION) >> 20)
 
 
 def ensure_shipped(spark: SparkSession) -> None:
@@ -48,8 +69,9 @@ def get_spark(
     extra_conf: dict | None = None,
 ) -> SparkSession:
     master = master or os.environ.get("SPARK_GRAFT_MASTER") or (
-        f"local[{os.environ.get('SPARK_GRAFT_CPUS', '32')}]"
+        f"local[{os.environ.get('SPARK_GRAFT_CPUS') or host_cores()}]"
     )
+    heap = host_heap_mb()
     if shuffle_partitions is None:
         shuffle_partitions = int(
             os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", "32")
@@ -65,18 +87,19 @@ def get_spark(
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
         .config(
             "spark.driver.memory",
-            os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"),
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM", f"{heap}m"),
         )
-        # pin a real initial heap: with -Xms at the 1g default, the first
-        # big Arrow wave rides the heap-expansion boundary and G1
-        # intermittently stalls the stage ~100s (observed ~50% of runs)
+        # pin a real initial heap (half the maximum): with -Xms at the 1g
+        # default, the first big Arrow wave rides the heap-expansion
+        # boundary and G1 intermittently stalls the stage ~100s (observed
+        # ~50% of runs)
         .config(
             "spark.driver.extraJavaOptions",
-            os.environ.get("SPARK_GRAFT_DRIVER_OPTS", "-Xms16g"),
+            os.environ.get("SPARK_GRAFT_DRIVER_OPTS", f"-Xms{heap // 2}m"),
         )
         .config(
             "spark.executor.extraJavaOptions",
-            os.environ.get("SPARK_GRAFT_EXECUTOR_OPTS", "-Xms4g"),
+            os.environ.get("SPARK_GRAFT_EXECUTOR_OPTS", f"-Xms{heap // 2}m"),
         )
         # ignored under local[*] (driver heap rules); REQUIRED under
         # local-cluster: the [n,cores,mem] spec caps the worker, but the
@@ -85,7 +108,7 @@ def get_spark(
         # executor launch)
         .config(
             "spark.executor.memory",
-            os.environ.get("SPARK_GRAFT_EXECUTOR_MEM", "8g"),
+            os.environ.get("SPARK_GRAFT_EXECUTOR_MEM", f"{heap}m"),
         )
         .config("spark.memory.fraction", "0.7")
         # shuffle/spill to tmpfs when available: local-mode shuffles on a

@@ -15,9 +15,17 @@ def spark():
 
 
 @pytest.fixture(scope="session")
-def sample_site_corpus():
+def reference_samples():
+    """The reference spec's sample files; skips the test when absent."""
     from cobweb_spark.testkit import fixtures as fx
 
     if not os.path.isdir(fx.REFERENCE_SAMPLES):
         pytest.skip("reference sample fixtures not available")
-    return fx.build_sample_site_corpus()
+    return fx.REFERENCE_SAMPLES
+
+
+@pytest.fixture(scope="session")
+def sample_site_corpus(reference_samples):
+    from cobweb_spark.testkit import fixtures as fx
+
+    return fx.build_sample_site_corpus(reference_samples)

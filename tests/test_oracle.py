@@ -22,8 +22,8 @@ BASE = fx.SAMPLE_SITE_BASE
 
 
 @pytest.fixture(scope="module")
-def zoo_doc():
-    return fx.build_link_zoo_corpus()[fx.LINK_ZOO_URL]
+def zoo_doc(reference_samples):
+    return fx.build_link_zoo_corpus(reference_samples)[fx.LINK_ZOO_URL]
 
 
 class TestLinkZoo:
@@ -228,21 +228,25 @@ class TestRedirects:
 
 
 class TestRobots:
+    @pytest.mark.usefixtures("reference_samples")
     def test_google_disallow_all(self):
         rules = RobotsRules(fx.google_robots_rules(host="localhost"))
         assert not rules.allowed("http://localhost/anything", "google")
         assert not rules.allowed("http://localhost/", "google")
 
+    @pytest.mark.usefixtures("reference_samples")
     def test_cybermapper_allow_all(self):
         rules = RobotsRules(fx.google_robots_rules(host="localhost"))
         assert rules.allowed("http://localhost/anything", "cybermapper")
 
+    @pytest.mark.usefixtures("reference_samples")
     def test_wildcard_fallback(self):
         rules = RobotsRules(fx.google_robots_rules(host="localhost"))
         # unknown UA falls back to '*' — /search disallowed for *
         assert not rules.allowed("http://localhost/search?q=x", "cobweb")
         assert rules.allowed("http://localhost/notlisted", "cobweb")
 
+    @pytest.mark.usefixtures("reference_samples")
     def test_allow_before_disallow(self):
         # /catalogs disallowed but /catalogs/about allowed first
         rules = RobotsRules(fx.google_robots_rules(host="localhost"))

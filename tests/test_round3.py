@@ -169,16 +169,17 @@ class TestStrayPercentParity:
 
 
 class TestPrecomputeEdgesParity:
-    """The precomputed edge table (keyed join + hoisted classification)
-    must reproduce the per-wave extraction path exactly."""
+    """The dictionary edge table (keyed join + hoisted classification)
+    must reproduce the per-wave extraction path exactly, and the crawl
+    must fall back to per-wave extraction where the table cannot apply."""
 
     def test_static_hoisted_classification(self, spark, sample_site_corpus):
         # no redirects in the sample corpus → classification is hoisted
-        cfg = CrawlConfig(precompute_edges=True)
+        cfg = CrawlConfig(precompute_edges=True, store_inbound_links=False)
         docs = corpus_df(spark, sample_site_corpus)
         crawler = SparkCrawler(spark, docs, cfg)
         res = crawler.crawl(fx.SAMPLE_SITE_BASE)
-        assert crawler._edges_static is True
+        assert crawler._edge_dict is not None
         assert crawler._key_join is True
         oracle = CrawlOracle(sample_site_corpus, cfg).crawl(
             fx.SAMPLE_SITE_BASE
@@ -194,7 +195,7 @@ class TestPrecomputeEdgesParity:
         docs = corpus_df(spark, corpus)
         crawler = SparkCrawler(spark, docs, cfg)
         res = crawler.crawl(fx.SEED_REDIRECT_BASE)
-        assert crawler._edges_static is False
+        assert crawler._edges_sel is None
         oracle = CrawlOracle(corpus, cfg).crawl(fx.SEED_REDIRECT_BASE)
         assert res.fetch_sequence() == oracle.fetch_sequence
         assert {r["url"] for r in res.seen.collect()} == oracle.seen
@@ -208,7 +209,7 @@ class TestPrecomputeEdgesParity:
         docs = corpus_df(spark, sample_site_corpus)
         crawler = SparkCrawler(spark, docs, cfg)
         res = crawler.crawl(fx.SAMPLE_SITE_BASE)
-        assert crawler._edges_static is False
+        assert crawler._edges_sel is None
         oracle = CrawlOracle(sample_site_corpus, cfg).crawl(
             fx.SAMPLE_SITE_BASE
         )

@@ -251,35 +251,6 @@ class TestJpegCodec:
             assert got["n_bytes"] == want["n_bytes"]
 
 
-class TestSlimExpandParity:
-    """cfg.slim_expand keys the expand path on xxhash64(link); at any
-    collision-free scale it must produce bit-identical crawl results to
-    the string-exact mode."""
-
-    def test_slim_matches_string_exact(self, spark, sample_site_corpus):
-        from cobweb_spark.config import CrawlConfig
-        from cobweb_spark.plans.crawler import SparkCrawler
-        from cobweb_spark.sources.corpus import corpus_df
-        from cobweb_spark.testkit.fixtures import SAMPLE_SITE_BASE
-
-        docs = corpus_df(spark, sample_site_corpus)
-        results = {}
-        for mode in (True, False):
-            res = SparkCrawler(
-                spark, docs, CrawlConfig(slim_expand=mode)
-            ).crawl(SAMPLE_SITE_BASE)
-            pages = [
-                (r["fetch_order"], r["url"], r["depth"], r["parent"])
-                for r in res.pages.orderBy("fetch_order").collect()
-            ]
-            seen = sorted(r["url"] for r in res.seen.collect())
-            edges = sorted(
-                (r["src"], r["dst"]) for r in res.edges.collect()
-            )
-            results[mode] = (pages, seen, edges)
-        assert results[True] == results[False]
-
-
 class TestPiiRedact:
     def test_crafted_redaction(self, spark):
         docs = _docs_df(

@@ -1,10 +1,10 @@
 """Round-7 optimization tests.
 
-The dictionary edge layout (``crawler._ensure_edges`` ``use_dict``
-branch) restructures the precompute expand path — dedup/anti-join on
+The dictionary edge layout (``crawler._ensure_edges``) restructures
+the precompute expand path — dedup/anti-join on
 8-byte keys, (link, host) re-attached post-chain, robots deferred to
-unique links — and must be result-identical to the classic path on
-every surface (pages, seen, edges, wave count), in both plain-BFS and
+unique links — and must be result-identical to the per-wave spans path
+on every surface (pages, seen, edges, wave count), in both plain-BFS and
 politeness-budget modes.
 """
 
@@ -59,7 +59,7 @@ def _crawl_surface(spark, docs, seeds, **kw):
     )
     seen = sorted(r["url"] for r in res.seen.collect())
     edges = sorted(tuple(r) for r in res.edges.collect())
-    mode = "dict" if crawler._edge_dict is not None else "classic"
+    mode = "dict" if crawler._edge_dict is not None else "spans"
     crawler.close()
     return mode, pages, seen, edges, res.n_waves
 
@@ -87,17 +87,17 @@ class TestDictEdgeParity:
     def test_plain_bfs_parity(self, spark, small_scale):
         docs, seeds = small_scale
         m_dict, *dict_surface = _crawl_surface(spark, docs, seeds)
-        # store_inbound_links=True forces the classic string edge table
-        m_cls, *cls_surface = _crawl_surface(
+        # store_inbound_links=True forces the per-wave spans path
+        m_spans, *spans_surface = _crawl_surface(
             spark, docs, seeds, store_inbound_links=True
         )
-        assert (m_dict, m_cls) == ("dict", "classic")
-        assert dict_surface == cls_surface
+        assert (m_dict, m_spans) == ("dict", "spans")
+        assert dict_surface == spans_surface
 
     def test_robots_parity(self, spark, small_scale):
         # the dictionary layout defers the robots gate to AFTER dedup +
         # seen rejection (the predicate is a function of the link alone)
-        # — must yield the identical surface to the classic pre-dedup
+        # — must yield the identical surface to the spans path's pre-dedup
         # gate on a corpus where rules actually reject links
         from cobweb_spark.sources.corpus import robots_df
 
@@ -134,14 +134,14 @@ class TestDictEdgeParity:
                 ).collect()
             )
             seen = sorted(r["url"] for r in res.seen.collect())
-            mode = "dict" if crawler._edge_dict is not None else "classic"
+            mode = "dict" if crawler._edge_dict is not None else "spans"
             crawler.close()
             return mode, pages, seen
 
         m_dict, *d_surface = run()
-        m_cls, *c_surface = run(store_inbound_links=True)
-        assert (m_dict, m_cls) == ("dict", "classic")
-        assert d_surface == c_surface
+        m_spans, *s_surface = run(store_inbound_links=True)
+        assert (m_dict, m_spans) == ("dict", "spans")
+        assert d_surface == s_surface
         # the rules actually bit: beyond the (filter-exempt) seeds, no
         # host2 link may have been enqueued
         n_host2_seeds = sum("host2.example.com" in s for s in seeds)
@@ -153,13 +153,13 @@ class TestDictEdgeParity:
     def test_budget_parity(self, spark, small_scale):
         # politeness admission + the unified bucketed discovery_order
         # assignment (round 7 removed the budget path's range-sampling
-        # zip) must stay rank-exact through both edge layouts
+        # zip) must stay rank-exact through both expand paths
         docs, seeds = small_scale
         m_dict, *dict_surface = _crawl_surface(
             spark, docs, seeds, host_budget=23
         )
-        m_cls, *cls_surface = _crawl_surface(
+        m_spans, *spans_surface = _crawl_surface(
             spark, docs, seeds, host_budget=23, store_inbound_links=True
         )
-        assert (m_dict, m_cls) == ("dict", "classic")
-        assert dict_surface == cls_surface
+        assert (m_dict, m_spans) == ("dict", "spans")
+        assert dict_surface == spans_surface

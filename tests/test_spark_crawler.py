@@ -122,6 +122,52 @@ class TestSampleSiteParity:
             assert idx.get(url) == golden, url
 
 
+class TestInboundIndexParity:
+    """The inbound-links index covers every document link, internal or
+    not, on both expand paths (precompute_edges falls back to per-wave
+    spans when inbound links are stored)."""
+
+    @pytest.fixture(scope="class")
+    def mixed_hosts(self, spark):
+        corpus, seeds = fx.scale_corpus_as_oracle_dict(
+            n_hosts=6,
+            pages_per_host=15,
+            mega_host_factor=2,
+            out_degree=6,
+            media_ratio=0.2,
+            cross_host_prob=0.3,
+            seed=5,
+            n_seeds=3,
+        )
+        # seeds round-robin over hosts: with n_seeds=3 they are the first
+        # pages of the three internal hosts
+        internal = [f"http://host{h}.example.com/*" for h in range(3)]
+        assert [s.split("/")[2] for s in seeds] == [
+            f"host{h}.example.com" for h in range(3)
+        ]
+        return corpus, corpus_df(spark, corpus), internal, seeds
+
+    @pytest.mark.parametrize("precompute", [False, True])
+    def test_inbound_matches_oracle(self, spark, mixed_hosts, precompute):
+        from cobweb_spark.operators.graph import inbound_links
+
+        corpus, docs, internal, seeds = mixed_hosts
+        cfg = CrawlConfig(
+            internal_urls=internal,
+            seed_urls=seeds,
+            precompute_edges=precompute,
+        )
+        res = SparkCrawler(spark, docs, cfg).crawl(None)
+        oracle = CrawlOracle(corpus, cfg).crawl(None)
+        idx = {
+            r["url"]: set(r["inbound"])
+            for r in inbound_links(res.candidates).collect()
+        }
+        assert idx == oracle.inbound
+        assert res.fetch_sequence() == oracle.fetch_sequence
+        assert {r["url"] for r in res.seen.collect()} == oracle.seen
+
+
 class TestRedirectParity:
     def test_redirect_chain(self, spark):
         corpus = fx.build_redirect_corpus()

@@ -148,16 +148,14 @@ class TestSimilarity:
 
 
 class TestMultimodal:
-    def test_decode_plumbing(self, spark):
+    def test_decode_plumbing(self, spark, sample_site_corpus):
         from cobweb_spark.operators.multimodal import (
             decode_media,
             media_payloads,
         )
         from cobweb_spark.sources.corpus import corpus_df
-        from cobweb_spark.testkit import fixtures as fx
 
-        corpus = fx.build_sample_site_corpus()
-        docs = corpus_df(spark, corpus)
+        docs = corpus_df(spark, sample_site_corpus)
         media = media_payloads(docs)
         decoded = decode_media(media)
         rows = decoded.collect()
@@ -167,13 +165,12 @@ class TestMultimodal:
             assert len(r["feature"]) == 16
             assert abs(sum(r["feature"]) - 1.0) < 1e-3
 
-    def test_strict_raises(self, spark):
+    def test_strict_raises(self, spark, sample_site_corpus):
         from cobweb_spark.operators.multimodal import (
             decode_media,
             media_payloads,
         )
         from cobweb_spark.sources.corpus import corpus_df
-        from cobweb_spark.testkit import fixtures as fx
 
         try:
             import PIL  # noqa: F401
@@ -181,8 +178,7 @@ class TestMultimodal:
             pytest.skip("PIL available; strict mode would decode")
         except ImportError:
             pass
-        corpus = fx.build_sample_site_corpus()
-        docs = corpus_df(spark, corpus)
+        docs = corpus_df(spark, sample_site_corpus)
         with pytest.raises(Exception, match="NotImplementedError|no codec"):
             decode_media(media_payloads(docs), strict=True).collect()
 
